@@ -3,10 +3,10 @@ package graft.api
 import graft.analyze.{Analyzer, Html}
 import graft.index.{IndexWriter, InvertedIndex}
 import graft.io.TableIO
-import graft.query.{BooleanQuery, QueryFrontend, Search}
+import graft.query.{BooleanQuery, Bm25, QueryFrontend, Search, Wand}
 import graft.stats.Stats
 import graft.streaming.IncrementalIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -76,10 +76,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   @volatile private var indexStatusTime: Long = 0L
   /** upserts since the corpus lineage was last folded into a checkpoint */
   private var sinceCheckpoint = 0
-  /** committed compressed index servable via the WAND path; cleared by any
-    * mutation (the persisted snapshot is stale once the live LSM moves) */
-  @volatile private var persistedDir: Option[String] = None
-  private var persistedCfg: IndexWriter.Config = IndexWriter.Config()
+  /** committed compressed index servable via the WAND path, with the
+    * layout and frozen stats it was written with; cleared by any mutation
+    * (the persisted snapshot is stale once the live LSM moves) */
+  @volatile private var persisted: Option[SearchEngine.Persisted] = None
   /** query-independent authority prior (doc_id, pr) + blend β; when set,
     * every search blends it into the ranking (Search.blendScores). Survives
     * corpus mutations by design: docs absent from the prior take pr = 0
@@ -156,7 +156,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       lastErr = null
       indexed = true
       sinceCheckpoint = 0
-      persistedDir = None // any previously attached snapshot is superseded
+      persisted = None // any previously attached snapshot is superseded
       cache.clear() // a rebuilt index invalidates every cached response
       true
     } finally inFlight.set(false)
@@ -209,7 +209,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           // drive a deterministic mid-build stopIndexing)
           onGroupCommitted(g.size)
         }
-        TableIO.writeMeta(tableDir, TableIO.IndexMeta(t.nDocs, t.avgDl))
+        val meta = TableIO.IndexMeta(t.nDocs, t.avgDl)
+        TableIO.writeMeta(tableDir, meta)
         // per-repo df derives from the cached postings + the corpus's
         // (doc_id, repo) map — no second tokenization pass
         val tsRepo = t.postings
@@ -246,8 +247,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           sinceCheckpoint = 0
           // the committed compressed index is queryable via the WAND path
           // with its frozen stats until the next mutation
-          persistedDir = Some(tableDir)
-          persistedCfg = cfg
+          persisted = Some(SearchEngine.Persisted(tableDir, cfg, meta))
           cache.clear()
         }
         true
@@ -261,7 +261,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   /** true while search() serves global queries from the committed
     * compressed snapshot via block-max WAND; false once a mutation
     * invalidates the snapshot (search falls back to the live LSM tables). */
-  def servesFromPersisted: Boolean = persistedDir.isDefined
+  def servesFromPersisted: Boolean = persisted.isDefined
 
   /** GET /api/stopIndexing: arm the cooperative stop flag. Returns false
     * when no indexing run is in flight (the reference's "Индексация не
@@ -337,7 +337,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     if (store.pointer.exists(p => p._1 - p._2 >= compactEvery))
       IncrementalIndex.compactState(store, spark)
     invalidateTables()
-    persistedDir = None // the compressed snapshot no longer matches the LSM
+    persisted = None // the compressed snapshot no longer matches the LSM
     cache.clear() // cached responses may cite the replaced/deleted doc
     true
   }
@@ -436,11 +436,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = Search.conjunctive(t.postings, kept).count()
     val top = Search.bm25TopKAfter(t.postings, t.docStats, dfs, t.nDocs,
       t.avgDl, limit, afterScore, afterDoc)
-    val items = Search.decorate(corpus, top, dfs.keySet).collect().map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
+    val items = Search.decorate(corpus, top, dfs.keySet).collect()
+      .map(r => item(r, r.getAs[Double]("score")))
     SearchResponse(result = true, total, items.toSeq, null)
   }
 
@@ -483,21 +480,18 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = BooleanQuery.matches(t.postings, q).count()
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
     val top = BooleanQuery.topK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q, limit)
-    val items = Search.decorate(corpus, top, dfs.keySet).collect().map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
+    val items = Search.decorate(corpus, top, dfs.keySet).collect()
+      .map(r => item(r, r.getAs[Double]("score")))
     SearchResponse(result = true, total, items.toSeq, null)
   }
 
   private def doSearch(query: String, site: Option[String],
                        offset: Int, limit: Int, lang: String): SearchResponse = {
-    // one coherent snapshot: corpus and tables are reassigned together by
-    // mutators (under the same lock), so reading them under it prevents a
-    // concurrent indexPage from pairing new corpus content with old
-    // postings mid-search
-    val (corpus, t, pDir) = synchronized { (this.corpus, tables, persistedDir) }
+    // one coherent snapshot: corpus, tables, the persisted snapshot and the
+    // prior are reassigned by mutators under the same lock, so reading them
+    // under it prevents a concurrent indexPage from pairing new corpus
+    // content with old postings (or a stale snapshot) mid-search
+    val (corpus, t, snap, prior) = synchronized { (this.corpus, tables, persisted, authorityPrior) }
     // BOTH sides analyze through the same per-lang lexicon (reference
     // lemmatizes query and index alike: SearcherPage.java:39,
     // IndexingServiceImpl.java:144-155)
@@ -516,6 +510,57 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     if (plan.isEmpty) return SearchResponse(result = true, 0, Nil, null)
     val kept = plan.terms.map(_.term)
     val dfs = plan.terms.map(pt => pt.term -> pt.df).toMap
+    // rank tier: a committed compressed snapshot (startIndexingPersisted,
+    // not yet invalidated by a mutation) serves global queries through the
+    // block-max WAND path with the snapshot's FROZEN stats — rank-identical
+    // to the DataFrame aggregate by construction (shared formula +
+    // tie-breaks; asserted in SearchEngineSpec). Site-scoped queries stay on
+    // the DataFrame path (shards are not repo-scoped).
+    snap match {
+      case Some(p) if site.isEmpty => searchPersisted(p, corpus, prior, kept, dfs, offset, limit)
+      case _ => searchTables(corpus, t, prior, site, kept, dfs, offset, limit)
+    }
+  }
+
+  /** The persisted tier in two Spark jobs after the frontend's df lookup:
+    * ONE WAND pass yields the FULL match count and the ranked top
+    * offset+limit together, then ONE id-filtered corpus scan decorates the
+    * page, which is ordered by rank on the driver. */
+  private def searchPersisted(p: SearchEngine.Persisted, corpus: DataFrame,
+                              prior: Option[(DataFrame, Double)], kept: Seq[String],
+                              dfs: Map[String, Long], offset: Int, limit: Int): SearchResponse = {
+    val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, p.meta.nDocs) }
+    // k = offset + limit without Int overflow; an offset at or past the end
+    // means k > total, so the pass already holds the match the clamp picks
+    val want = math.min(offset.toLong + limit, Int.MaxValue).toInt
+    // two-stage ranking under a prior: WAND retrieves C candidates by pure
+    // BM25 (an upper bound of the blended score, Search.rerankWithPrior
+    // doc), the prior reranks those C rows only
+    val k = if (prior.isEmpty) want else math.min(math.max(8L * want, 64L), Int.MaxValue).toInt
+    val pass = Wand.conjunctivePass(IndexWriter.readForTerms(spark, p.dir, kept, p.cfg),
+      idfs, p.meta.avgDl, k)
+    if (pass.matches == 0) return SearchResponse(result = true, 0, Nil, null)
+    val (effOffset, effLimit) = clampPage(offset, limit, pass.matches)
+    val page: Seq[(Long, Double)] = prior match {
+      case Some((pr, beta)) =>
+        import spark.implicits._
+        val cands = pass.hits.map(h => (h.docId, h.score)).toDF("doc_id", "score")
+        Search.rerankWithPrior(cands, pr, beta, effLimit, effOffset).collect()
+          .sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getDouble(2))).toSeq
+      case None => pass.hits.drop(effOffset).take(effLimit).map(h => (h.docId, h.score))
+    }
+    if (page.isEmpty) return SearchResponse(result = true, pass.matches, Nil, null)
+    val decorated = Search.decorateIds(corpus, page.map(_._1), dfs.keySet).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val items = page.flatMap { case (id, score) => decorated.get(id).map(item(_, score)) }
+    SearchResponse(result = true, pass.matches, items, null)
+  }
+
+  /** The live LSM tables: count, DataFrame top-k, decorate. */
+  private def searchTables(corpus: DataFrame, t: InvertedIndex.Tables,
+                           prior: Option[(DataFrame, Double)], site: Option[String],
+                           kept: Seq[String], dfs: Map[String, Long],
+                           offset: Int, limit: Int): SearchResponse = {
     val scoped = site match {
       case Some(r) => t.postings.join(
         corpus.filter(col("repo") === r).select("doc_id"), Seq("doc_id"), "left_semi")
@@ -526,57 +571,34 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // (SearchServiceImpl.java:90); a UI pager needs the total
     val total = Search.conjunctive(scoped, kept).count()
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    // reference quirk (SearchServiceImpl.java:101-118): an offset at or
-    // past the end of the result list clamps to the LAST element rather
-    // than returning an empty page. Dataset.offset takes an Int; clamp so
-    // a >2^31-row match count can't become a negative offset.
-    val (effOffset, effLimit) =
-      if (offset > 0 && offset >= total)
-        (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
-      else (offset, limit)
-    // rank tier: a committed compressed snapshot (startIndexingPersisted,
-    // not yet invalidated by a mutation) serves global queries through the
-    // block-max WAND path with the snapshot's FROZEN stats (_meta.json) —
-    // rank-identical to the DataFrame aggregate by construction (shared
-    // formula + tie-breaks; asserted in SearchEngineSpec). Site-scoped
-    // queries stay on the DataFrame path (shards are not repo-scoped).
-    val prior = authorityPrior
-    val top = pDir match {
-      case Some(dir) if site.isEmpty =>
-        val meta = TableIO.readMeta(dir).get
-        val idfs = dfs.map { case (tm, d) => tm -> graft.query.Bm25.idfS(d, meta.nDocs) }
-        def wandTopK(k: Int) = graft.query.Wand.topK(
-          IndexWriter.readForTerms(spark, dir, kept, persistedCfg),
-          idfs, meta.avgDl, k)
-        prior match {
-          case Some((p, beta)) =>
-            // two-stage ranking: WAND retrieves C candidates by pure BM25
-            // (an upper bound of the blended score, Search.rerankWithPrior
-            // doc), the prior reranks those C rows only
-            val c = math.max(8 * (effOffset + effLimit), 64)
-            Search.rerankWithPrior(wandTopK(c), p, beta, effLimit, effOffset)
-          case None =>
-            wandTopK(effOffset + effLimit).filter(col("rank") > effOffset)
-        }
-      case _ =>
-        prior match {
-          case Some((p, beta)) =>
-            Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
-                effOffset + effLimit, beta)
-              .filter(col("rank") > effOffset)
-              .withColumnRenamed("blend", "score")
-          case None =>
-            Search.bm25TopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, effLimit, effOffset)
-        }
+    val (effOffset, effLimit) = clampPage(offset, limit, total)
+    val top = prior match {
+      case Some((p, beta)) =>
+        Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
+            effOffset + effLimit, beta)
+          .filter(col("rank") > effOffset)
+          .withColumnRenamed("blend", "score")
+      case None =>
+        Search.bm25TopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, effLimit, effOffset)
     }
-    val rows = Search.decorate(corpus, top, dfs.keySet).collect()
-    val items = rows.map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
+    val items = Search.decorate(corpus, top, dfs.keySet).collect()
+      .map(r => item(r, r.getAs[Double]("score")))
     SearchResponse(result = true, total, items.toSeq, null)
   }
+
+  /** reference quirk (SearchServiceImpl.java:101-118): an offset at or past
+    * the end of the result list clamps to the LAST element rather than
+    * returning an empty page. Dataset.offset takes an Int; clamp so a
+    * >2^31-row match count can't become a negative offset. */
+  private def clampPage(offset: Int, limit: Int, total: Long): (Int, Int) =
+    if (offset > 0 && offset >= total)
+      (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
+    else (offset, limit)
+
+  /** one response item from a decorated row (repo, path, title, snippet) */
+  private def item(r: Row, score: Double): SearchItem =
+    SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"), r.getAs[String]("path"),
+      r.getAs[String]("title"), r.getAs[String]("snippet"), score)
 
   /** per-repo (repo, pages, lemmas) rows + the ALL total, computed from
     * STORE tables only (docs log + signed per-repo df deltas) — a status
@@ -633,6 +655,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
 }
 
 object SearchEngine {
+
+  /** A committed compressed snapshot the facade serves from: its table
+    * directory, the layout it was written with and its frozen stats. */
+  private[graft] case class Persisted(dir: String, cfg: IndexWriter.Config, meta: TableIO.IndexMeta)
 
   /** Reattach to an existing engine state WITHOUT rebuilding: open the
     * newest committed `run-N` LSM store under `stateDir`, restore the

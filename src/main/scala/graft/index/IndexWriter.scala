@@ -2,7 +2,7 @@ package graft.index
 
 import graft.io.TableIO
 import graft.query.Bm25
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One encoded posting run: the postings of `term` restricted to docId
@@ -486,12 +486,13 @@ object IndexWriter {
 
   /** Read the index back, pruned to the query's terms: partition pruning on
     * bucket (only |terms| of nBuckets dirs are scanned) + pushed term
-    * filter. */
+    * filter. The schema is the writer's own (ShardPosting), so a read never
+    * runs a footer schema-inference job. */
   def readForTerms(spark: SparkSession, tableDir: String, terms: Seq[String],
                    cfg: Config = Config()): Dataset[ShardPosting] = {
     import spark.implicits._
     val buckets = terms.map(bucketOf(_, cfg.nBuckets)).distinct
-    spark.read.parquet(s"$tableDir/data")
+    spark.read.schema(Encoders.product[ShardPosting].schema).parquet(s"$tableDir/data")
       .filter(col("bucket").isin(buckets.map(x => x: Any): _*))
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .select("term", "shard", "bucket", "numDocs", "maxTfNorm", "bytes")

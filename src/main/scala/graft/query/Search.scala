@@ -731,27 +731,41 @@ object Search {
 
   /** Result decoration on the final ≤ k rows only (reference
     * SearchServiceImpl.java:101-118): join repo/path, compute title +
-    * highlighted snippet. `top` carries (rank, doc_id, score); shared by the
-    * DataFrame path (search) and the facade's persisted block-max WAND path,
-    * so the two tiers cannot diverge in response shape.
+    * highlighted snippet. `top` carries (rank, doc_id, score). The facade's
+    * persisted block-max WAND path decorates through [[decorateIds]], which
+    * builds the same columns, so the two tiers cannot diverge in response
+    * shape.
     *
     * HTML corpora: snippet over the extracted text, title from <title>
     * (reference SearchServiceImpl.java:284-296); code corpora fall back to
     * identity text + path-as-title — both branches are codegen'd Columns
     * evaluated on the final k rows only. */
   def decorate(corpus: DataFrame, top: DataFrame, terms: Set[String],
-               htmlAware: Boolean = true): DataFrame = {
+               htmlAware: Boolean = true): DataFrame =
+    top.join(corpus.select("doc_id", "repo", "path", "lang", "content"), "doc_id")
+      .select(col("rank") +: col("doc_id") +: decorations(terms, htmlAware) :+ col("score"): _*)
+      .orderBy("rank")
+
+  /** [[decorate]] for a page already collected on the driver: ONE
+    * `doc_id IN (…)` filtered scan of the corpus yields
+    * (doc_id, repo, path, title, snippet) per id, in no particular order —
+    * the caller orders by its own ranks. Docs absent from the corpus are
+    * absent from the answer (decorate's inner join). HTML-aware, like the
+    * facade's decorate. */
+  def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String]): DataFrame =
+    corpus.filter(col("doc_id").isin(ids.map(x => x: Any): _*))
+      .select(col("doc_id") +: decorations(terms, htmlAware = true): _*)
+
+  /** repo, path, title, snippet over corpus columns (path, lang, content) —
+    * the one column builder both decoration forms share. */
+  private def decorations(terms: Set[String], htmlAware: Boolean): Seq[org.apache.spark.sql.Column] = {
     val snip = Snippets.makeSnippetUdf(terms)
     val title =
       if (htmlAware) graft.analyze.Html.titleOf(col("content"), col("path"))
       else col("path")
     val snipSrc =
       if (htmlAware) graft.analyze.Html.textOf(col("content")) else col("content")
-    top.join(corpus.select("doc_id", "repo", "path", "lang", "content"), "doc_id")
-      .withColumn("title", title)
-      .withColumn("snippet", snip(snipSrc, col("lang")))
-      .select("rank", "doc_id", "repo", "path", "title", "snippet", "score")
-      .orderBy("rank")
+    Seq(col("repo"), col("path"), title.as("title"), snip(snipSrc, col("lang")).as("snippet"))
   }
 
   /** Authority-blended ranking: BM25 relevance × a query-independent static

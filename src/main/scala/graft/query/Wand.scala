@@ -25,7 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object Wand {
 
-  case class Hit(shard: Int, docId: Long, score: Double)
+  case class Hit(docId: Long, score: Double)
+
+  /** The serve order: score desc, docId asc (the tie-break every tier shares). */
+  val byRank: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
+
+  /** One conjunctive pass over the query's shards: the total match count and
+    * the global top-k, ordered by [[byRank]]. */
+  case class Pass(matches: Long, hits: Seq[Hit])
 
   /** Exact conjunctive top-k per shard. `idfs` must be keyed by every query
     * term; `avgDl` must be the value the index was encoded with; returns
@@ -33,67 +40,97 @@ object Wand {
   def topK(shards: Dataset[ShardPosting], idfs: Map[String, Double], avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val nTerms = idfs.size
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-      val blobs = it.toArray
-      if (blobs.length < nTerms) Iterator.empty // some term absent from shard => no conjunction
-      else {
-        val idf = idfB.value
-        // rarest-first: fewest docs drives the intersection
-        val ordered = blobs.sortBy(_.numDocs)
-        val cursors = ordered.map(b => (idf(b.term), new PostingCodec.Cursor(new PostingCodec.Decoded(b.bytes))))
-        // top-k heap: root = current worst of the best k
-        implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-        val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
-        var theta = Double.NegativeInfinity
-        val lead = cursors(0)._2
-        while (!lead.exhausted && !cursors.exists(_._2.exhausted)) {
-          val cand = lead.docId
-          var aligned = true
-          var i = 1
-          while (aligned && i < cursors.length) {
-            val c = cursors(i)._2
-            c.skipTo(cand)
-            if (c.exhausted) { aligned = false }
-            else if (c.docId != cand) {
-              // candidate dead; restart from the larger docId
-              if (c.docId > cand) lead.skipTo(c.docId)
-              aligned = false
-            }
-            i += 1
-          }
-          if (aligned) {
-            // block-max θ check before exact scoring
-            var ub = 0.0
-            var j = 0
-            while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
-            // `>= theta` (not `>`) so equal-score smaller-docId candidates
-            // still get scored and can win the tie-break
-            if (heap.size < k || ub >= theta) {
-              var score = 0.0
-              j = 0
-              while (j < cursors.length) {
-                val (w, c) = cursors(j)
-                score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
-                j += 1
-              }
-              val h = Hit(shard, cand, score)
-              if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-              else if (score > theta || (score == theta && cand < heap.head.docId)) {
-                heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-              }
-            }
-            lead.next()
-          }
-        }
-        heap.iterator.map(h => (h.docId, h.score))
-      }
-    }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
+      shardPass(it.toArray, idfs, avgDl, k)._2.iterator.map(h => (h.docId, h.score))
+    }.toDF("doc_id", "score"), k)
   }
+
+  /** [[topK]]'s per-shard loop, answered on the driver in ONE Spark job:
+    * the shards' (matches, ≤ k hits) are collected, the counts summed and
+    * the hits merged by [[byRank]]. The facade's persisted tier serves a
+    * search (count + page) from this single pass. The shard grouping is an
+    * RDD shuffle so it stays inside that one job (adaptive execution would
+    * run a Dataset shuffle as a job of its own). */
+  def conjunctivePass(shards: Dataset[ShardPosting], idfs: Map[String, Double],
+                      avgDl: Double, k: Int): Pass = {
+    val perShard = shards.rdd.groupBy(_.shard)
+      .map { case (_, blobs) => shardPass(blobs.toArray, idfs, avgDl, k) }
+      .collect()
+    Pass(perShard.iterator.map(_._1).sum, perShard.flatMap(_._2).sorted(byRank).take(k).toSeq)
+  }
+
+  /** One shard's conjunctive loop: (matches, ≤ k best hits). Every aligned
+    * candidate is counted; only the block-max θ check decides whether it is
+    * scored. */
+  private def shardPass(blobs: Array[ShardPosting], idf: Map[String, Double],
+                        avgDl: Double, k: Int): (Long, Seq[Hit]) = {
+    // some term absent from shard => no conjunction
+    if (blobs.length < idf.size) return (0L, Nil)
+    // rarest-first: fewest docs drives the intersection
+    val ordered = blobs.sortBy(_.numDocs)
+    val cursors = ordered.map(b => (idf(b.term), new PostingCodec.Cursor(new PostingCodec.Decoded(b.bytes))))
+    // top-k heap: root = current worst of the best k
+    val heap = new scala.collection.mutable.PriorityQueue[Hit]()(byRank)
+    var theta = Double.NegativeInfinity
+    var matches = 0L
+    val lead = cursors(0)._2
+    while (!lead.exhausted && !cursors.exists(_._2.exhausted)) {
+      val cand = lead.docId
+      var aligned = true
+      var i = 1
+      while (aligned && i < cursors.length) {
+        val c = cursors(i)._2
+        c.skipTo(cand)
+        if (c.exhausted) { aligned = false }
+        else if (c.docId != cand) {
+          // candidate dead; restart from the larger docId
+          if (c.docId > cand) lead.skipTo(c.docId)
+          aligned = false
+        }
+        i += 1
+      }
+      if (aligned) {
+        matches += 1
+        // block-max θ check before exact scoring
+        var ub = 0.0
+        var j = 0
+        while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
+        // `>= theta` (not `>`) so equal-score smaller-docId candidates
+        // still get scored and can win the tie-break
+        if (heap.size < k || ub >= theta) {
+          var score = 0.0
+          j = 0
+          while (j < cursors.length) {
+            val (w, c) = cursors(j)
+            score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
+            j += 1
+          }
+          offer(heap, Hit(cand, score), k).foreach(theta = _)
+        }
+        lead.next()
+      }
+    }
+    (matches, heap.toSeq)
+  }
+
+  /** Offer `h` to a top-k heap ordered by [[byRank]]; returns the new θ (the
+    * k-th best score) once the heap is full and changed. */
+  private def offer(heap: scala.collection.mutable.PriorityQueue[Hit], h: Hit, k: Int): Option[Double] =
+    if (k <= 0) None
+    else if (heap.size < k) {
+      heap.enqueue(h)
+      if (heap.size == k) Some(heap.head.score) else None
+    } else if (h.score > heap.head.score || (h.score == heap.head.score && h.docId < heap.head.docId)) {
+      heap.dequeue(); heap.enqueue(h)
+      Some(heap.head.score)
+    } else None
+
+  /** The global merge shared by the three strategies: per-shard (doc_id,
+    * score) lists → (rank, doc_id, score) top-k, ties docId asc. */
+  private def ranked(hits: DataFrame, k: Int): DataFrame =
+    hits.orderBy(desc("score"), asc("doc_id")).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
+      .select(col("rank"), col("doc_id"), col("score"))
 
   /** Classic DISJUNCTIVE block-max WAND (Broder et al. 2003 + block-max
     * refinement, Ding & Suel 2011): OR-semantics top-k — any doc containing
@@ -113,17 +150,14 @@ object Wand {
                       avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-      val idf = idfB.value
+    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       val cursors = scala.collection.mutable.ArrayBuffer.from(
         it.toArray.map { b =>
           val dec = new PostingCodec.Decoded(b.bytes)
-          new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
+          new C(idfs(b.term), new PostingCodec.Cursor(dec), idfs(b.term) * dec.maxTfNorm)
         }.filter(!_.cur.exhausted))
-      implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
+      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(byRank)
       var theta = Double.NegativeInfinity
       while (cursors.nonEmpty) {
         val sorted = cursors.sortInPlace()(Ordering.by(_.cur.docId))
@@ -158,11 +192,7 @@ object Wand {
                 score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
                 j += 1
               }
-              val h = Hit(shard, pivotDoc, score)
-              if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-              else if (score > theta || (score == theta && pivotDoc < heap.head.docId)) {
-                heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-              }
+              offer(heap, Hit(pivotDoc, score), k).foreach(theta = _)
             }
             // advance every cursor sitting on pivotDoc
             var j2 = 0
@@ -177,10 +207,7 @@ object Wand {
         }
       }
       heap.iterator.map(h => (h.docId, h.score))
-    }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    }.toDF("doc_id", "score"), k)
   }
 
   /** Disjunctive BM25 top-k via MaxScore pruning (Turtle & Flood 1995,
@@ -209,18 +236,15 @@ object Wand {
                    avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-      val idf = idfB.value
+    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       // static MaxScore layout: ascending term upper bound
       val cs = it.toArray.map { b =>
         val dec = new PostingCodec.Decoded(b.bytes)
-        new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
+        new C(idfs(b.term), new PostingCodec.Cursor(dec), idfs(b.term) * dec.maxTfNorm)
       }.filter(!_.cur.exhausted).sortBy(_.termUB)
       val live = Array.fill(cs.length)(true)
-      implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
+      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(byRank)
       var theta = Double.NegativeInfinity
       val prefixUB = new Array[Double](cs.length + 1)
       var done = cs.isEmpty
@@ -271,11 +295,7 @@ object Wand {
             j -= 1
           }
           if (viable) {
-            val h = Hit(shard, cand, score)
-            if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-            else if (score > theta || (score == theta && cand < heap.head.docId)) {
-              heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-            }
+            offer(heap, Hit(cand, score), k).foreach(theta = _)
           }
           i = firstEss
           while (i < cs.length) {
@@ -288,9 +308,6 @@ object Wand {
         }
       }
       heap.iterator.map(h => (h.docId, h.score))
-    }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    }.toDF("doc_id", "score"), k)
   }
 }

@@ -398,12 +398,23 @@ class SearchEngineSpec extends AnyFunSuite {
     import java.nio.file.Files
     val cfg = graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8)
     val dir = Files.createTempDirectory("graft-api-wandpath").toString
+    // every query over the fixture's dense vocabulary matches some doc; two
+    // extra docs add terms that exist but never co-occur
+    import org.apache.spark.sql.functions.{col, concat, lit, max, sha2}
+    import spark.implicits._
     val corpus = Corpus.fromDocuments(spark, "/root/testdata/sf0.001")
-    val pe = new SearchEngine(spark, corpus)
+    val next = corpus.agg(max("doc_id")).head().getLong(0) + 1
+    val loners = Seq((next, "spark join zebraword"), (next + 1, "spark join yakword"))
+      .toDF("doc_id", "content")
+      .select(col("doc_id"), lit("src0").as("repo"), concat(lit("doc/"), col("doc_id")).as("path"),
+        lit("0" * 40).as("commit"), lit("en").as("lang"), col("content"),
+        sha2(col("content"), 256).as("sha256"), lit(200).as("code"))
+    val docs = corpus.unionByName(loners)
+    val pe = new SearchEngine(spark, docs)
     assert(pe.startIndexingPersisted(dir, 1L, cfg, groupSize = 4))
     assert(pe.servesFromPersisted, "committed snapshot must arm the WAND tier")
     // LSM-only engine = the DataFrame reference path
-    val de = new SearchEngine(spark, corpus)
+    val de = new SearchEngine(spark, docs)
     assert(de.startIndexing())
     assert(!de.servesFromPersisted)
     for (q <- Seq("spark join", "dup hash spark", "hash")) {
@@ -423,8 +434,47 @@ class SearchEngineSpec extends AnyFunSuite {
     val p2a = pe.search("spark join", offset = 10, limit = 10)
     val p2b = de.search("spark join", offset = 10, limit = 10)
     assert(p2a.data.map(_.uri) == p2b.data.map(_.uri))
+    // an offset at or past the end clamps to the LAST match on both tiers,
+    // with the full count; offset + limit must not overflow Int
+    val total = de.search("dup hash spark", limit = 10).count
+    for (off <- Seq(total.toInt, total.toInt + 7, Int.MaxValue)) {
+      val a = pe.search("dup hash spark", offset = off, limit = 10)
+      val b = de.search("dup hash spark", offset = off, limit = 10)
+      assert(a.count == total && b.count == total, s"offset $off: count ${a.count} vs $total")
+      assert(a.data.length == 1 && a.data.map(_.uri) == b.data.map(_.uri), s"offset $off")
+      assert(math.abs(a.data.head.relevance - b.data.head.relevance) < 1e-9)
+    }
+    // terms that all exist but never co-occur: an empty conjunction is a
+    // successful zero-count answer on both tiers
+    for (e <- Seq(pe, de)) {
+      assert(e.search("zebraword", limit = 10).count == 1)
+      val r = e.search("zebraword yakword", limit = 10)
+      assert(r.result && r.count == 0 && r.data.isEmpty && r.error == null, s"$r")
+    }
+    // a cache-miss global search on the WAND tier is the frontend df lookup,
+    // one WAND pass (count + page) and one decorate scan: <= 4 Spark jobs.
+    // A marker job after it proves every job start reached the listener
+    // (one listener queue delivers events in order).
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("wand-serve", "cache-miss WAND-tier search")
+      val r = try pe.search("join hash", limit = 10) finally sc.clearJobGroup()
+      assert(r.result && r.count == de.search("join hash", limit = 10).count)
+      sc.setJobGroup("wand-serve-marker", "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("wand-serve-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("wand-serve-marker"), "listener never saw the marker job")
+      val jobs = groups.toArray.count(_ == "wand-serve")
+      assert(jobs >= 1 && jobs <= 4, s"WAND-tier search started $jobs Spark jobs")
+    } finally sc.removeSparkListener(listener)
     // a mutation invalidates the snapshot: fall back to the live tables
-    import spark.implicits._
     val doc = Seq((0L, "src0", "doc/0", "0" * 40, "en", "wandfallbackword"))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")
     assert(pe.indexPage(doc))
