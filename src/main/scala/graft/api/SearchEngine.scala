@@ -167,8 +167,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     * committed buckets resumable, and a restart call skips them
     * byte-identically (IndexWriter.write resume contract). Returns false
     * if stopped before completion (FAILED status + lastError recorded —
-    * reference IndexingServiceImpl.java:67-83). */
-  /** `championsM = Some(m)` additionally persists the champion-list aux
+    * reference IndexingServiceImpl.java:67-83).
+    *
+    * `championsM = Some(m)` additionally persists the champion-list aux
     * artifact (per-term top-m, Champions.persist) and the per-repo term
     * stats beside the bucket index — the snapshot then ships with its
     * derived artifacts and a cold reader gets facets + the champions tier
@@ -346,9 +347,6 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Option[String], Int, Int, String), (Long, SearchResponse)]()
   val cacheTtlMs = 60000L
 
-  /** `lang` picks the query-analysis branch (stoplist/normalizer — "ru"
-    * routes through the Cyrillic chain) and must match how the corpus was
-    * tokenized, exactly like Search.search's contract. */
   // ---- percolation alerts (reverse search over incoming pages) ----------
   /** stored alert queries: id → analyzed conjunctive terms (the SAME
     * analyzer chain as search, so an alert fires exactly when the search
@@ -397,6 +395,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def loadAuthorityPrior(tableDir: String, beta: Double = 0.5): Unit =
     setAuthorityPrior(IndexWriter.readAux(spark, tableDir, "prior"), beta)
 
+  /** `lang` picks the query-analysis branch (stoplist/normalizer — "ru"
+    * routes through the Cyrillic chain) and must match how the corpus was
+    * tokenized, exactly like Search.search's contract. */
   def search(query: String, site: Option[String] = None,
              offset: Int = 0, limit: Int = 20, lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.query.Bm25
+import graft.query.{Bm25, Search}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -74,17 +74,12 @@ object Champions {
   def topK(champions: DataFrame, dfs: Map[String, Long], nDocs: Long,
            avgDl: Double, k: Int): DataFrame = {
     val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
     val scored = champions
       .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
+      .withColumn("term_score",
+        Bm25.score(col("tf"), Search.perTerm(dfs, 0L), col("dl"), nDocs, avgDl))
       .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("score"))
+    Search.ranked(scored, k).withColumn("rank", col("rank").cast("long"))
   }
 
   /** Tiered retrieval with an EXACTNESS certificate (IIR §7.2.1 tiered
@@ -130,7 +125,7 @@ object Champions {
       }
     }.sum
     val cands = champQ.select("doc_id").distinct()
-    val tier1 = graft.query.Search.bm25TopKDisjunctive(
+    val tier1 = Search.bm25TopKDisjunctive(
       postings.join(broadcast(cands), Seq("doc_id"), "left_semi"),
       docStats, dfs, nDocs, avgDl, k)
     val rows = tier1.collect()
@@ -139,6 +134,6 @@ object Champions {
       (tier1.sparkSession.createDataFrame(
         tier1.sparkSession.sparkContext.parallelize(rows.toIndexedSeq, 1), tier1.schema), true)
     else
-      (graft.query.Search.bm25TopKDisjunctive(postings, docStats, dfs, nDocs, avgDl, k), false)
+      (Search.bm25TopKDisjunctive(postings, docStats, dfs, nDocs, avgDl, k), false)
   }
 }

@@ -60,22 +60,15 @@ object BooleanQuery {
 
   /** BM25 top-k over the tree's candidates, scoring the positive leaves
     * that are present in each doc (disjunctive scoring over a boolean-
-    * filtered candidate set — Lucene's exact contract). `dfs` must cover
+    * filtered candidate set — Lucene's exact contract): the ungated
+    * [[Search.candidates]] over the tree's matches. `dfs` must cover
     * [[positiveTerms]]. */
   def topK(postings: DataFrame, docStats: DataFrame, dfs: Map[String, Long],
            nDocs: Long, avgDl: Double, q: Node, k: Int): DataFrame = {
-    val cand = matches(postings, q)
-    val terms = positiveTerms(q).toSeq.sorted
-    val dfCol = terms.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("term") === t, lit(dfs(t))).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(cand, Seq("doc_id"), "left_semi")
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    val posDfs = positiveTerms(q).toSeq.sorted.map(t => t -> dfs(t)).toMap
+    val scored = Search.candidates(
+      postings.join(matches(postings, q), Seq("doc_id"), "left_semi"),
+      docStats, posDfs, nDocs, avgDl)
+    Search.ranked(scored, k)
   }
 }

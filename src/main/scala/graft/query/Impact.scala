@@ -72,7 +72,6 @@ object Impact {
       .agg(count(lit(1)).as("n_terms"), sum("impact").as("impact"))
       .filter(col("n_terms") === uniq.size)
       .select(col("doc_id"), col("impact"))
-    Search.rankTopK(cand, k, Seq(desc("impact"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("impact"))
+    Search.ranked(cand, k, score = "impact")
   }
 }

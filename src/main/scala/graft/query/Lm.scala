@@ -53,12 +53,9 @@ object Lm {
              k: Int, mu: Double = Mu): DataFrame = {
     require(cfs.nonEmpty && cfs.values.forall(_ > 0L), "cf must be positive")
     val terms = cfs.keys.toSeq.sorted
-    val muPt: Map[String, Double] =
-      terms.map(t => t -> mu * (cfs(t).toDouble / totalTokens.toDouble)).toMap
-    val qConst = terms.map(t => math.log(muPt(t))).sum
-    val muPtCol = terms.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(muPt(t))).otherwise(acc)
-    }
+    val muPt = terms.map(t => t -> mu * (cfs(t).toDouble / totalTokens.toDouble))
+    val qConst = muPt.map { case (_, m) => math.log(m) }.sum
+    val muPtCol = Search.perTerm(muPt, 0.0)
     val scored = postings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .withColumn("delta", log(lit(1.0) + col("tf") / muPtCol))
@@ -67,8 +64,7 @@ object Lm {
       .withColumn("score",
         col("sdelta") + lit(qConst) -
           lit(terms.size.toDouble) * log(col("dl") + lit(mu)))
-    Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    Search.ranked(scored, k)
   }
 
   /** scalar twin for specs */

@@ -64,20 +64,16 @@ object Passage {
                dfs: Map[String, Long], nPassages: Long, avgPl: Double,
                k: Int): DataFrame = {
     val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
     val scored = passagePostings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .join(passageLengths, Seq("doc_id", "s"))
       .withColumn("term_score",
-        Bm25.score(col("tf"), dfCol, col("pl"), nPassages, avgPl))
+        Bm25.score(col("tf"), Search.perTerm(dfs, 0L), col("pl"), nPassages, avgPl))
       .groupBy("doc_id", "s").agg(sum(col("term_score")).as("score"))
     val best = scored
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(desc("score"), asc("s"))))
       .filter(col("rn") === 1).drop("rn")
-    Search.rankTopK(best, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("s"), col("score"))
+    Search.ranked(best, k, carry = Seq("s"))
   }
 }

@@ -59,11 +59,9 @@ object Sdm {
     val c = totalTokens.toDouble
     val uniq = terms.distinct.filter(cfs.contains)
     // --- f_T: the Lm decomposition over the unigram set
-    val muPt = uniq.map(t => t -> mu * (cfs(t).toDouble / c)).toMap
-    val constT = uniq.map(t => math.log(muPt(t))).sum
-    val muPtCol = uniq.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(muPt(t))).otherwise(acc)
-    }
+    val muPt = uniq.map(t => t -> mu * (cfs(t).toDouble / c))
+    val constT = muPt.map { case (_, m) => math.log(m) }.sum
+    val muPtCol = Search.perTerm(muPt, 0.0)
     val sT = postings.filter(col("term").isin(uniq.map(x => x: Any): _*))
       .withColumn("delta", log(lit(1.0) + col("tf") / muPtCol))
       .groupBy("doc_id").agg(sum("delta").as("sd_t"))
@@ -99,7 +97,6 @@ object Sdm {
         lit(lambdaT) * (col("sd_t") + lit(constT) - lit(uniq.size.toDouble) * lnDl) +
         lit(lambdaO) * (col("sd_o") + lit(constO) - lit(nO.toDouble) * lnDl) +
         lit(lambdaU) * (col("sd_u") + lit(constU) - lit(nU.toDouble) * lnDl))
-    Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    Search.ranked(scored, k)
   }
 }

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,12 +10,25 @@ import org.apache.spark.sql.functions._
   * crossing driver→executor exactly once, vs the reference's N+1 JDBC
   * round-trips per query (SearcherPage.java:95,109,118).
   *
-  * Physical shape (verified via .explain in SearchSpec):
+  * Every DataFrame BM25 top-k is built from the same two pieces:
+  *   - [[candidates]] — the one scored-candidates builder: `term IN (…)`
+  *     postings scan ⋈ docStats → Σ BM25 per doc_id, UNGATED
+  *     (doc_id, n_terms, score). Variants are gates or score transforms on
+  *     top: conjunctive n_terms = |q|, min-match n_terms ≥ m, disjunctive
+  *     none, prf per-term weights, recency/blend/phrase/cursor on the
+  *     conjunctive rows.
+  *   - [[ranked]] — the one rank stamp: top-k by (score desc, doc_id asc)
+  *     → (rank, doc_id, …, score). The other doc-keyed scorers (QL,
+  *     PL2, VSM, SDM, MaxP, the WAND merge, champion lists) end in it too,
+  *     and per-term statistics enter every plan through [[perTerm]].
+  *
+  * Physical shape of bm25TopK (pinned by SearchSpec on sf0.001):
   *   postings scan (IN-list filter on term, pushed to parquet)
-  *   → shuffle-join with docStats on doc_id (or broadcast when docStats small)
+  *   → join with docStats on doc_id (broadcast when docStats is small)
   *   → hash aggregate per doc_id (partial+final): n_terms + Σ bm25
   *   → filter n_terms = k      (conjunctive intersection, J5b)
   *   → TakeOrderedAndProject   (top-k, no global sort)
+  *   → Window row_number       (rank stamp over the ≤ k rows)
   */
 object Search {
 
@@ -37,46 +50,64 @@ object Search {
       .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
   }
 
-  /** Shared conjunctive BM25 candidate scoring: one IN-filtered postings
-    * scan → docStats join → hash aggregate → n_terms = |q| conjunction.
-    * Returns (doc_id, score). Used by bm25TopK and blendTopK so the
-    * candidate semantics cannot diverge. */
-  private def conjunctiveScores(postings: DataFrame, docStats: DataFrame,
-                                dfs: Map[String, Long], nDocs: Long,
-                                avgDl: Double): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
+  /** A per-term literal column: CASE term WHEN t THEN v … ELSE default,
+    * folded in `values` order. Query terms are few, so per-term statistics
+    * (df, weight, μ·P(t), …) enter the plan as literals — no dictionary
+    * join. */
+  private[graft] def perTerm(values: Iterable[(String, Any)], default: Any): Column =
+    values.foldLeft(lit(default)) { case (acc, (t, v)) =>
+      when(col("term") === t, lit(v)).otherwise(acc)
     }
+
+  /** The scored-candidates builder behind every BM25 top-k: ONE
+    * `term IN (…)` postings scan → docStats join → per-posting BM25
+    * (× an integer per-term weight when `weights` is given) → hash
+    * aggregate per doc_id. Returns UNGATED (doc_id, n_terms, score);
+    * callers gate on n_terms or transform the score. dfs: term -> df, from
+    * the driver-side plan. */
+  def candidates(postings: DataFrame, docStats: DataFrame,
+                 dfs: Map[String, Long], nDocs: Long, avgDl: Double,
+                 weights: Map[String, Int] = Map.empty): DataFrame = {
+    val terms = dfs.keys.toSeq.sorted
+    val bm25 = Bm25.score(col("tf"), perTerm(dfs, 0L), col("dl"), nDocs, avgDl)
     postings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
+      .withColumn("term_score", if (weights.isEmpty) bm25 else perTerm(weights, 0) * bm25)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
-      .filter(col("n_terms") === terms.size)
-      .select(col("doc_id"), col("score"))
   }
+
+  /** Conjunctive BM25 candidates (doc_id, score): [[candidates]] gated on
+    * n_terms = |q|. */
+  private def conjunctiveScores(postings: DataFrame, docStats: DataFrame,
+                                dfs: Map[String, Long], nDocs: Long,
+                                avgDl: Double): DataFrame =
+    candidates(postings, docStats, dfs, nDocs, avgDl)
+      .filter(col("n_terms") === dfs.size)
+      .select(col("doc_id"), col("score"))
 
   /** distributed top-k + rank stamp: TakeOrdered limit, then row_number over
     * the ≤ k surviving rows (single tiny partition) with the SAME sort keys
     * — the two sorts must match exactly for ranks to be correct, which is
     * why this lives in one place. */
-  private[query] def rankTopK(scored: DataFrame, k: Int, sort: Seq[org.apache.spark.sql.Column],
-                              offset: Int = 0): DataFrame =
+  private def rankTopK(scored: DataFrame, k: Int, sort: Seq[Column],
+                       offset: Int = 0): DataFrame =
     scored.orderBy(sort: _*).offset(offset).limit(k)
       .withColumn("rank", row_number().over(Window.orderBy(sort: _*)) + offset)
 
-  /** BM25-scored conjunctive top-k: (rank, doc_id, score).
-    * dfs: term -> df (from the driver-side plan — terms are few, so df
-    * enters the plan as a literal CASE map, no dictionary join needed). */
+  /** The rank stamp of every doc-keyed top-k: [[rankTopK]] by
+    * (`score` desc, doc_id asc), projected to (rank, doc_id, carry…, score). */
+  private[graft] def ranked(scored: DataFrame, k: Int, score: String = "score",
+                            carry: Seq[String] = Nil, offset: Int = 0): DataFrame =
+    rankTopK(scored, k, Seq(desc(score), asc("doc_id")), offset)
+      .select((col("rank") +: col("doc_id") +: carry.map(col)) :+ col(score): _*)
+
+  /** BM25-scored conjunctive top-k: (rank, doc_id, score). */
   def bm25TopK(postings: DataFrame, docStats: DataFrame,
                dfs: Map[String, Long], nDocs: Long, avgDl: Double,
-               k: Int, offset: Int = 0): DataFrame = {
-    val scored = conjunctiveScores(postings, docStats, dfs, nDocs, avgDl)
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")), offset)
-      .select(col("rank"), col("doc_id"), col("score"))
-  }
+               k: Int, offset: Int = 0): DataFrame =
+    ranked(conjunctiveScores(postings, docStats, dfs, nDocs, avgDl), k, offset = offset)
 
   /** Minimum-should-match BM25 (Lucene's `minimumShouldMatch` — the middle
     * ground between AND and OR that verbose queries need: AND returns
@@ -85,26 +116,14 @@ object Search {
     * minMatch = |q| is bm25TopK, minMatch = 1 the disjunctive variant.
     * Same ONE IN-filtered postings pass + hash aggregate; the match-count
     * gate runs on the aggregated candidate-sized rows, so the relaxation
-    * costs nothing extra. */
+    * costs nothing extra. (rank, doc_id, n_terms, score). */
   def bm25TopKMinMatch(postings: DataFrame, docStats: DataFrame,
                        dfs: Map[String, Long], nDocs: Long, avgDl: Double,
                        minMatch: Int, k: Int): DataFrame = {
     require(minMatch >= 1 && minMatch <= dfs.size,
       s"minMatch must be in [1, ${dfs.size}]")
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
-      .filter(col("n_terms") >= minMatch)
-      .select(col("doc_id"), col("n_terms"), col("score"))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("n_terms"), col("score"))
+    ranked(candidates(postings, docStats, dfs, nDocs, avgDl).filter(col("n_terms") >= minMatch),
+      k, carry = Seq("n_terms"))
   }
 
   /** Score EXPLAIN (Lucene's `explain` API as a relation): the per-term
@@ -118,9 +137,7 @@ object Search {
               dfs: Map[String, Long], nDocs: Long, avgDl: Double,
               k: Int): DataFrame = {
     val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
+    val dfCol = perTerm(dfs, 0L)
     val top = bm25TopK(postings, docStats, dfs, nDocs, avgDl, k)
       .select(col("rank"), col("doc_id"))
     postings
@@ -148,8 +165,7 @@ object Search {
       .join(ages, "doc_id")
       .withColumn("score",
         col("score") * pow(lit(0.5), col("age_days") / lit(halfLifeDays)))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(scored, k)
   }
 
   /** Grouped top-k ("top hits per facet", Elasticsearch top_hits): the best
@@ -174,19 +190,8 @@ object Search {
     * conjunction filter; the exhaustive twin of Wand.topKDisjunctive. */
   def bm25TopKDisjunctive(postings: DataFrame, docStats: DataFrame,
                           dfs: Map[String, Long], nDocs: Long, avgDl: Double,
-                          k: Int): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
-  }
+                          k: Int): DataFrame =
+    ranked(candidates(postings, docStats, dfs, nDocs, avgDl), k)
 
   /** Synonym-group BM25 top-k (Lucene SynonymQuery semantics, made exact):
     * each query position is a GROUP of interchangeable surface terms — the
@@ -222,8 +227,7 @@ object Search {
       .withColumn("gscore", Bm25.score(col("gtf"), col("gdf"), col("dl"), nDocs, avgDl))
       .groupBy("doc_id").agg(count(lit(1)).as("n_grps"), sum("gscore").as("score"))
       .filter(col("n_grps") === groups.size)
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(scored, k)
   }
 
   /** Phrase-proximity boosted BM25: score′ = BM25 + β·ln(1 + phrase_tf) —
@@ -245,8 +249,7 @@ object Search {
       .join(phraseTf, Seq("doc_id"), "left")
       .withColumn("score", col("score") +
         lit(beta) * log(lit(1.0) + coalesce(col("phrase_tf"), lit(0L)).cast("double")))
-    rankTopK(boosted, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(boosted, k)
   }
 
   /** Cursor ("search after") pagination: the next page = top-k of the
@@ -267,8 +270,7 @@ object Search {
     val scored = conjunctiveScores(postings, docStats, dfs, nDocs, avgDl)
       .filter(col("score") < afterScore ||
         (col("score") === afterScore && col("doc_id") > afterDoc))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(scored, k)
   }
 
   /** Expansion-term mining for blind relevance feedback: the strongest
@@ -287,36 +289,14 @@ object Search {
       .groupBy("term").agg(sum(col("tf")).as("w"))
       .orderBy(desc("w"), asc("term")).limit(e)
 
-  /** Disjunctive BM25 with per-term integer weights — the scoring half of
-    * pseudo-relevance feedback (original terms count `wOrig`×, expansion
-    * terms 1×). wdfs: term -> (df, weight); both enter the plan as literal
-    * CASE maps like bm25TopK's dfs, so the only work is one IN-filtered
-    * postings scan + one hash aggregate. */
-  def bm25TopKWeighted(postings: DataFrame, docStats: DataFrame,
-                       wdfs: Map[String, (Long, Int)], nDocs: Long,
-                       avgDl: Double, k: Int): DataFrame = {
-    val terms = wdfs.keys.toSeq.sorted
-    val dfCol = wdfs.foldLeft(lit(0L)) { case (acc, (t, (d, _))) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val wCol = wdfs.foldLeft(lit(0)) { case (acc, (t, (_, w))) =>
-      when(col("term") === t, lit(w)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", wCol * Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
-  }
-
   /** Pseudo-relevance feedback (Rocchio-style blind feedback, Manning IIR
     * §9.1.6): retrieve the top-r docs conjunctively, mine the e strongest
     * terms from them (`prfExpansion`), then re-rank DISJUNCTIVELY with the
     * original terms weighted `wOrig`× and expansion terms 1× — docs matching
     * only expansion terms can now surface (recall widens), while original-
-    * term matches dominate (precision holds).
+    * term matches dominate (precision holds). The rescore is [[candidates]]
+    * with integer per-term weights, ungated: one IN-filtered postings scan +
+    * one hash aggregate.
     *
     * Scale shape: two bounded driver collects (r doc ids, e terms — the
     * same ≤-dozens contract as QueryFrontend.plan's df lookup) bracketing
@@ -331,9 +311,8 @@ object Search {
     val expTerms = prfExpansion(postings, fbDocs, dfs.keySet, e)
       .select("term").collect().map(_.getString(0)).toSet
     val expDfs = QueryFrontend.lookupDf(termStats, expTerms)
-    val wdfs = dfs.map { case (t, d) => t -> (d, wOrig) } ++
-      expDfs.map { case (t, d) => t -> (d, 1) }
-    bm25TopKWeighted(postings, docStats, wdfs, nDocs, avgDl, k)
+    val weights = dfs.map { case (t, _) => t -> wOrig } ++ expDfs.map { case (t, _) => t -> 1 }
+    ranked(candidates(postings, docStats, dfs ++ expDfs, nDocs, avgDl, weights), k)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher 2009) of two
@@ -353,8 +332,7 @@ object Search {
       .select(col("doc_id"),
         (coalesce(lit(1.0) / (lit(k0) + col("ra")), lit(0.0)) +
          coalesce(lit(1.0) / (lit(k0) + col("rb")), lit(0.0))).as("rrf"))
-    rankTopK(scored, k, Seq(desc("rrf"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("rrf"))
+    ranked(scored, k, score = "rrf")
   }
 
   /** Multi-stage ranking cascade (Wang, Lin & Metzler, SIGIR 2011, "A
@@ -377,25 +355,17 @@ object Search {
                   phraseTerms: Seq[String], n1: Int = 50, n2: Int = 20,
                   k: Int = 10): DataFrame = {
     val terms = dfs.keys.toSeq.sorted
-    val m = postings.filter(col("term").isin(terms.map(x => x: Any): _*))
-    val c1 = rankTopK(m.groupBy("doc_id").agg(sum("tf").as("stf")),
-        n1, Seq(desc("stf"), asc("doc_id")))
+    val c1 = ranked(postings.filter(col("term").isin(terms.map(x => x: Any): _*))
+        .groupBy("doc_id").agg(sum("tf").as("stf")), n1, score = "stf")
       .select("doc_id")
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val s2 = m.join(c1, "doc_id").join(docStats, "doc_id")
-      .withColumn("w", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum("w").as("score"))
-    val c2 = rankTopK(s2, n2, Seq(desc("score"), asc("doc_id")))
-      .select("doc_id", "score")
+    val s2 = candidates(postings.join(c1, "doc_id"), docStats, dfs, nDocs, avgDl)
+    val c2 = ranked(s2, n2).select("doc_id", "score")
     val ph = graft.index.Positional.phraseMatches(
       tokenPos.join(c2.select("doc_id"), "doc_id"), phraseTerms)
     val s3 = c2.join(ph, Seq("doc_id"), "left")
       .select(col("doc_id"), (col("score") +
         lit(0.5) * log(lit(1.0) + coalesce(col("phrase_tf"), lit(0L)))).as("score"))
-    rankTopK(s3, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(s3, k)
   }
 
   /** Fagin's Threshold Algorithm depth study (Fagin, Lotem & Naor, PODS
@@ -470,8 +440,7 @@ object Search {
         ((coalesce(col("na"), lit(0.0)) + coalesce(col("nb"), lit(0.0))) *
           (when(col("na").isNotNull, lit(1L)).otherwise(lit(0L)) +
            when(col("nb").isNotNull, lit(1L)).otherwise(lit(0L))).cast("double")).as("mnz"))
-    rankTopK(scored, k, Seq(desc("mnz"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("mnz"))
+    ranked(scored, k, score = "mnz")
   }
 
   /** Maximal Marginal Relevance result diversification (Carbonell &
@@ -683,8 +652,7 @@ object Search {
     val perW = Window.partitionBy("repo").orderBy(desc("score"), asc("doc_id"))
     val kept = results.withColumn("_rr", row_number().over(perW))
       .filter(col("_rr") <= perRepo).drop("_rr")
-    rankTopK(kept, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("repo"), col("score"))
+    ranked(kept, k, carry = Seq("repo"))
   }
 
   /** Full flagship search: front-end plan → BM25 top-k → decorate with
@@ -758,7 +726,7 @@ object Search {
 
   /** repo, path, title, snippet over corpus columns (path, lang, content) —
     * the one column builder both decoration forms share. */
-  private def decorations(terms: Set[String], htmlAware: Boolean): Seq[org.apache.spark.sql.Column] = {
+  private def decorations(terms: Set[String], htmlAware: Boolean): Seq[Column] = {
     val snip = Snippets.makeSnippetUdf(terms)
     val title =
       if (htmlAware) graft.analyze.Html.titleOf(col("content"), col("path"))
@@ -790,9 +758,8 @@ object Search {
                 dfs: Map[String, Long], nDocs: Long, avgDl: Double,
                 prior: DataFrame, k: Int, beta: Double = 0.5): DataFrame = {
     val scored = conjunctiveScores(postings, docStats, dfs, nDocs, avgDl)
-    rankTopK(blendScores(scored, prior, beta), k, Seq(desc("blend"), asc("doc_id")))
+    ranked(blendScores(scored, prior, beta), k, score = "blend")
       .withColumn("rank", col("rank").cast("long"))
-      .select(col("rank"), col("doc_id"), col("blend"))
   }
 
   /** The blend factor join shared by `blendTopK` and the facade's two-stage
@@ -823,10 +790,8 @@ object Search {
     * trades rerank cost (C rows, trivial) for that certificate. */
   def rerankWithPrior(cands: DataFrame, prior: DataFrame, beta: Double,
                       k: Int, offset: Int = 0): DataFrame =
-    rankTopK(blendScores(cands.select(col("doc_id"), col("score")), prior, beta)
-        .drop("score").withColumnRenamed("blend", "score"),
-      k, Seq(desc("score"), asc("doc_id")), offset)
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(blendScores(cands.select(col("doc_id"), col("score")), prior, beta)
+        .drop("score").withColumnRenamed("blend", "score"), k, offset = offset)
 
   /** BM25F — field-weighted BM25 over (title, body) fields of the same page
     * (Robertson/Zaragoza 2004, the standard web-ranking upgrade: a title hit
@@ -886,9 +851,7 @@ object Search {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
       .filter(col("n_terms") === terms.size)
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .withColumn("rank", col("rank").cast("long"))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(scored, k).withColumn("rank", col("rank").cast("long"))
   }
 
   /** Related terms for query expansion: terms co-occurring with `term` in
@@ -965,9 +928,7 @@ object Search {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("rank", "doc_id", "score_r")
     }
-    val qwt = qRows.foldLeft(lit(0.0)) { case (acc, r) =>
-      when(col("term") === r.getString(0), lit(r.getDouble(1))).otherwise(acc)
-    }
+    val qwt = perTerm(qRows.map(r => r.getString(0) -> r.getDouble(1)), 0.0)
     val terms = qRows.map(_.getString(0)).toSeq
     val qn = norms.filter(col("doc_id") === docId).select(col("norm").as("qnorm"))
     val scored = w.filter(col("term").isin(terms.map(x => x: Any): _*))
@@ -978,8 +939,6 @@ object Search {
       .crossJoin(broadcast(qn))
       .select(col("doc_id"),
         round(col("dot") / (col("norm") * col("qnorm")), 4).as("score_r"))
-    rankTopK(scored, k, Seq(desc("score_r"), asc("doc_id")))
-      .withColumn("rank", col("rank").cast("long"))
-      .select(col("rank"), col("doc_id"), col("score_r"))
+    ranked(scored, k, score = "score_r").withColumn("rank", col("rank").cast("long"))
   }
 }

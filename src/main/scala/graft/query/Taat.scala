@@ -42,19 +42,14 @@ object Taat {
     val spark = postings.sparkSession
     import spark.implicits._
     val ordered = dfs.toSeq.sortBy { case (t, d) => (d, t) }.map(_._1)
-    val ord = ordered.zipWithIndex.map { case (t, i) => (t, (i + 1).toLong) }
-      .toDF("term", "idx")
-    val idxCol = ordered.zipWithIndex.foldLeft(lit(0L)) { case (acc, (t, i)) =>
-      when(col("term") === t, lit((i + 1).toLong)).otherwise(acc)
-    }
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
+    val idx = ordered.zipWithIndex.map { case (t, i) => t -> (i + 1).toLong }
+    val ord = idx.toDF("term", "idx")
+    val idxCol = Search.perTerm(idx, 0L)
     val matched = postings
       .filter(col("term").isin(ordered.map(x => x: Any): _*))
       .join(docStats, "doc_id")
       .withColumn("idx", idxCol)
-      .withColumn("w", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
+      .withColumn("w", Bm25.score(col("tf"), Search.perTerm(dfs, 0L), col("dl"), nDocs, avgDl))
       .select("doc_id", "idx", "w")
     val firstIdx = matched.groupBy("doc_id").agg(min("idx").as("first_idx"))
     // densified accumulator counts: every term advances i even when it
@@ -68,7 +63,7 @@ object Taat {
       .head.getLong(0)
     val admitted = firstIdx.filter(col("first_idx") <= iStar).select("doc_id")
     def topK(scored: DataFrame, label: String): DataFrame =
-      Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
+      Search.ranked(scored, k)
         .select(lit(label).as("strategy"), col("rank").cast("long").as("rank"),
           col("doc_id"), col("score"))
     // no admitted-join needed: any doc matched by a term idx ≤ i* has

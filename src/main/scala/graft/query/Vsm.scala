@@ -37,17 +37,14 @@ object Vsm {
     val terms = dfs.keys.toSeq.sorted
     val idf = terms.map(t => t -> math.log(nDocs.toDouble / dfs(t))).toMap
     val qnorm = math.sqrt(idf.values.map(x => x * x).sum)
-    val qw = terms.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(idf(t) / qnorm)).otherwise(acc)
-    }
+    val qw = Search.perTerm(terms.map(t => t -> idf(t) / qnorm), 0.0)
     val scored = postings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .withColumn("part", qw * (lit(1.0) + log(col("tf"))))
       .groupBy("doc_id").agg(sum("part").as("num"))
       .join(docNorms, "doc_id")
       .withColumn("score", col("num") / col("dnorm"))
-    Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+    Search.ranked(scored, k)
   }
 
   /** scalar twin for specs: score of one doc given its query-term tfs and

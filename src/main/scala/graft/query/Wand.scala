@@ -2,8 +2,6 @@ package graft.query
 
 import graft.index.{IndexWriter, PostingCodec, ShardPosting}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Conjunctive BM25 top-k over the compressed sharded index with block-max
   * pruning — the scale path of the query core (north star: "BM25 top-k with
@@ -13,7 +11,8 @@ import org.apache.spark.sql.functions._
   * grouped by shard (each group = the query's full working set for one
   * docId range, ≤ |terms| blobs), intersected + scored + top-k'd inside
   * `mapGroups` with zero further shuffle, then the tiny per-shard top-k
-  * lists (≤ k rows each) meet in a global TakeOrderedAndProject. Adding
+  * lists (≤ k rows each) meet in [[Search.ranked]], the rank stamp every
+  * DataFrame top-k shares (a global TakeOrderedAndProject). Adding
   * executors splits shards, not terms — scaling is embarrassing in the
   * shard dimension, which is why hot terms don't skew this path.
   *
@@ -40,7 +39,7 @@ object Wand {
   def topK(shards: Dataset[ShardPosting], idfs: Map[String, Double], avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
+    Search.ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       shardPass(it.toArray, idfs, avgDl, k)._2.iterator.map(h => (h.docId, h.score))
     }.toDF("doc_id", "score"), k)
   }
@@ -125,13 +124,6 @@ object Wand {
       Some(heap.head.score)
     } else None
 
-  /** The global merge shared by the three strategies: per-shard (doc_id,
-    * score) lists → (rank, doc_id, score) top-k, ties docId asc. */
-  private def ranked(hits: DataFrame, k: Int): DataFrame =
-    hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
-
   /** Classic DISJUNCTIVE block-max WAND (Broder et al. 2003 + block-max
     * refinement, Ding & Suel 2011): OR-semantics top-k — any doc containing
     * ≥1 query term scores. The reference itself is conjunctive-only; this is
@@ -150,7 +142,7 @@ object Wand {
                       avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
+    Search.ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       val cursors = scala.collection.mutable.ArrayBuffer.from(
         it.toArray.map { b =>
@@ -236,7 +228,7 @@ object Wand {
                    avgDl: Double, k: Int): DataFrame = {
     val spark = shards.sparkSession
     import spark.implicits._
-    ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
+    Search.ranked(shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       // static MaxScore layout: ascending term upper bound
       val cs = it.toArray.map { b =>

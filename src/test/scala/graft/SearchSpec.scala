@@ -1018,9 +1018,43 @@ class SearchSpec extends AnyFunSuite {
     assert(docs(1) == Map(1L -> 3L, 2L -> 2L, 3L -> 1L)) // OR
     assert(docs(2) == Map(1L -> 3L, 2L -> 2L))           // middle ground
     assert(docs(3) == Map(1L -> 3L))                     // == conjunctive
-    val conj = Search.bm25TopK(post, ds, dfs, 3L, 2.0, 10)
-      .collect().map(_.getLong(1)).toSet
-    assert(docs(3).keySet == conj)
+    // the candidate builder's three gates agree: min-match at the ends IS
+    // the disjunctive and the conjunctive ranking, row for row
+    def ranking(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(r.length - 1))).toSeq
+    def mm(m: Int) = ranking(Search.bm25TopKMinMatch(post, ds, dfs, 3L, 2.0, m, 10))
+    assert(mm(1) == ranking(Search.bm25TopKDisjunctive(post, ds, dfs, 3L, 2.0, 10)))
+    assert(mm(3) == ranking(Search.bm25TopK(post, ds, dfs, 3L, 2.0, 10)))
+  }
+
+  test("bm25TopK physical plan: term-filtered scan under the docStats join, one top-k, rank window on top") {
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val dfs = QueryFrontend.lookupDf(tables.termStats, Set("spark", "join"))
+    val plan = Search.bm25TopK(tables.postings, tables.docStats, dfs,
+        tables.nDocs, tables.avgDl, 10).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => strip(w.child)
+      case i: InputAdapter => strip(i.child)
+      case other => other
+    }
+    // the single-child spine from the root down to the first join
+    val spine = Iterator.iterate(strip(plan))(p => strip(p.children.head))
+      .takeWhile(_.children.size == 1).toSeq
+    val join = strip(spine.last.children.head)
+    assert(spine.map(_.nodeName) == Seq("Project", "Window", "TakeOrderedAndProject",
+      "Project", "Filter", "HashAggregate", "HashAggregate", "Project"), plan.toString)
+    assert(join.nodeName == "BroadcastHashJoin", plan.toString)
+    assert(plan.collect { case p if p.nodeName == "TakeOrderedAndProject" => p }.size == 1)
+    // the postings side is filtered on the query terms BELOW the join
+    strip(join.children.head) match {
+      case f: FilterExec =>
+        assert(f.condition.references.exists(_.name == "term"), f.toString)
+      case other => fail(s"expected the term filter under the join, got:\n$other")
+    }
   }
 
   test("segmentQuery: corpus-bigram glue yields [new york][pizza] segments") {
